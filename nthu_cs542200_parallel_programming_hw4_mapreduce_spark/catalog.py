@@ -65,7 +65,7 @@ def _app_id(spark: SparkSession) -> str:
 _SPREAD_MEMO: dict[tuple[str, int], tuple[DataFrame, DataFrame]] = {}
 
 
-def spread(df: DataFrame, parts: int | None = None) -> DataFrame:
+def spread(df: DataFrame) -> DataFrame:
     """Parallelize a small UNSPLITTABLE scan before CPU-heavy narrow
     work (round 14, guide §2.5 "input skew: one huge unsplittable
     file … repartition immediately after the read").
@@ -95,7 +95,7 @@ def spread(df: DataFrame, parts: int | None = None) -> DataFrame:
     if files and len(local) == len(files):
         nbytes = sum(os.path.getsize(f) for f in local if os.path.exists(f))
         cores = spark.sparkContext.defaultParallelism
-        target = parts or max(2, min(cores, (nbytes + 65_535) // 65_536))
+        target = max(2, min(cores, (nbytes + 65_535) // 65_536))
         if df.rdd.getNumPartitions() < target:
             out = df.repartition(target)
     _SPREAD_MEMO[key] = (df, out)

@@ -247,7 +247,8 @@ def run_job(spark: SparkSession, cfg: JobConfig) -> dict[str, object]:
     # partition index, so no identity partitioner — and no Python worker
     # — is needed anywhere on this path. The leading pid sort key also
     # satisfies the writer's required partition-column ordering, so no
-    # second (order-destroying) sort is inserted; PLANS.md records the
+    # second (order-destroying) sort is inserted;
+    # tests/test_plans.py::test_o11_output_path_is_jvm_sorted checks the
     # plan shape.
     order = (
         [F.col("word").asc(), F.col("cnt").asc()]

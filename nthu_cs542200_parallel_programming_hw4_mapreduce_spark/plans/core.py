@@ -3194,8 +3194,9 @@ def orc_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     Same materialize-once posture as ``delta_scan``/``xml_ingest``.
     Unlike XML, ORC is a first-class columnar source: the quantity
     predicate reaches the ORC reader as a pushed filter and the scan
-    prunes to the three referenced columns (PLANS.md shows
-    PushedFilters/ReadSchema on the OrcScan exactly as on parquet), so
+    prunes to the three referenced columns (PushedFilters/ReadSchema
+    on the OrcScan exactly as on parquet; tests/plan_fingerprints.json
+    pins its ``FileScan.orc``), so
     the round trip also certifies that the FAST path — not just
     correctness — survives the format change. Revenue rides try_cast
     DECIMAL(18,2) per the poison-row rule."""

@@ -2385,7 +2385,8 @@ def lsh_quality_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     repo-wide multi-consumer rule) instead of each side re-running the
     corpus tokenize → gram → distinct pipeline from its own scan: one
     parquet scan of documents in the whole audit instead of two, and
-    two fewer gram-explode stages (plans/r13/lsh_quality_eval_*.txt).
+    two fewer gram-explode stages (tests/plan_fingerprints.json pins
+    the shape: two scans of the one checkpoint, no parquet scan).
     Composing the shared cores directly (``lsh_candidate_pairs``,
     ``_ngram_jaccard_pairs``) also drops the two composed queries'
     presentation-only terminal sorts, which fed straight into a join

@@ -9,6 +9,8 @@ memo hits too.
 
 from __future__ import annotations
 
+import shutil
+
 from nthu_cs542200_parallel_programming_hw4_mapreduce_spark.catalog import (
     _READ_MEMO,
     spread,
@@ -22,9 +24,10 @@ def test_table_memo_hits_within_session(spark, sf_dir):
     assert a is b
 
 
-def test_table_memo_keyed_by_sf_dir(spark, sf_dir):
+def test_table_memo_keyed_by_sf_dir(spark, sf_dir, tmp_path):
+    shutil.copy(f"{sf_dir}/documents.parquet", tmp_path / "documents.parquet")
     a = table(spark, sf_dir, "documents")
-    b = table(spark, "/root/testdata/sf0.01", "documents")
+    b = table(spark, str(tmp_path), "documents")
     assert a is not b
     # and the memoized plans really point at different fixture files
     assert set(a.inputFiles()) != set(b.inputFiles())

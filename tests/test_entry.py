@@ -47,11 +47,30 @@ def test_registry_alignment():
 
 
 def test_all_queries_return_dataframes(spark, sf_dir):
+    """Every query builds, and its plan shape matches the committed
+    fingerprint (tools/plan_fingerprint.py)."""
+    import json
+
     from pyspark.sql import DataFrame
 
+    from tools.plan_fingerprint import FINGERPRINTS, REGENERATE, fingerprint
+
+    got = {}
     for name, fn in E.queries().items():
         df = fn(spark, sf_dir)
         assert isinstance(df, DataFrame), name
+        got[name] = fingerprint(df)
+    with open(FINGERPRINTS) as f:
+        want = json.load(f)
+    diff = [
+        f"{n}:\n  committed {want.get(n)}\n  now       {got.get(n)}"
+        for n in sorted(set(want) | set(got))
+        if want.get(n) != got.get(n)
+    ]
+    assert not diff, (
+        f"{len(diff)} plan fingerprint(s) changed; if intended, rerun "
+        f"`{REGENERATE}`\n" + "\n".join(diff)
+    )
 
 
 def test_window_queries_run_in_vanilla_session():
