@@ -23,6 +23,9 @@ LINES = [
     "egg fig banana date ",
 ]
 
+# every reference quirk at once (the CLI's --faithful)
+FAITHFUL = dict(drop_trailing_token=True, fuse_chunk_lines=True, partition_fn="first_char")
+
 
 def reference_sim(lines, chunk_size, num_reducer, *, drop_trailing, fuse):
     """Hand-simulation of hw4.cc's map path: chunk (Q2), tokenize (Q1),
@@ -148,6 +151,26 @@ def test_quirk_q2_fuses_lines(spark, tmp_path, locality_file):
     assert sorted(got) == [("four", 1), ("one", 1), ("twothree", 1)]
 
 
+def test_fixed_counts_ignore_chunk_size(spark, tmp_path, locality_file):
+    """Without Q1/Q2, chunk boundaries change no word: the same counts
+    for any chunk size, on lines with and without trailing or doubled
+    spaces."""
+    p = tmp_path / "ragged.txt"
+    lines = LINES + ["hat  ice", "", " jam", "kiwi lime  ", "mango"]
+    p.write_text("\n".join(lines) + "\n")
+    want = Counter(w for l in lines for w in l.split(" ") if w)
+    for chunk_size in (1, 2, 7):
+        cfg = JobConfig(
+            f"cs{chunk_size}", 3, 0, str(p), chunk_size, locality_file,
+            str(tmp_path / f"o{chunk_size}"),
+        )
+        run_job(spark, cfg)
+        got = Counter()
+        for r in range(3):
+            got.update(dict(read_out(os.path.join(cfg.output_dir, f"{cfg.job_name}-{r + 1}.out"))))
+        assert got == want, chunk_size
+
+
 def test_sort_descending(spark, tmp_path, input_file, locality_file):
     cfg, _ = run(
         spark, tmp_path, input_file, locality_file,
@@ -206,17 +229,20 @@ def test_custom_map_and_reduce_hooks(spark, tmp_path, input_file, locality_file)
     assert got == expected
 
 
-def test_event_log_per_task_timings(spark, tmp_path, input_file, locality_file):
+@pytest.mark.parametrize("flags", [{}, FAITHFUL], ids=["fixed", "faithful"])
+def test_event_log_per_task_timings(spark, tmp_path, input_file, locality_file, flags):
     """hw4.cc:153 contract: Complete_MapTask/Complete_ReduceTask rows
     carry per-task ms. The values must be the scheduler's own TaskEnd
     measurements (surfaced in run_job's return), not one shared
     aggregate (the round-2 deviation): reduce rows map 1:1 onto the
     R-task write stage; map rows cycle through the upstream stages'
-    real task times."""
-    cfg, outputs = run(spark, tmp_path, input_file, locality_file)
+    real task times. Faithful mode also runs the line-numbering
+    broadcast sub-job, which must not displace the write as the last
+    stage."""
+    cfg, outputs = run(spark, tmp_path, input_file, locality_file, **flags)
     map_ms, red_ms = outputs["map_task_ms"], outputs["reduce_task_ms"]
     assert map_ms and all(isinstance(m, int) and m >= 0 for m in map_ms)
-    # the pid repartition pins the write stage to exactly R tasks
+    # the R-way repartition pins the write stage to exactly R tasks
     assert len(red_ms) == cfg.num_reducer
     lines = open(outputs["log"]).read().splitlines()
     logged_map = [

@@ -438,44 +438,48 @@ def test_q20_decorrelates_to_single_aggregate(spark, sf_dir):
 
 
 def test_o11_output_path_is_jvm_sorted(spark, tmp_path):
-    """The faithful O11 write (round-2 VERDICT "What's wrong" #1): the
-    per-reducer sort must be Tungsten's spillable in-partition Sort after
-    one exchange on pid — no Python evaluation (the old path buffered a
-    whole reducer partition through a Python sorted()), and the leading
-    pid sort key means the partition-by-value writer inserts no second,
-    order-destroying sort."""
-    from pyspark.sql import functions as F
+    """The faithful O11 write (round-2 VERDICT "What's wrong" #1), on
+    ``run_job``'s own staging helper: the per-reducer sort must be
+    Tungsten's spillable in-partition Sort after one R-way exchange, and
+    the leading pid sort key means the partition-by-value writer inserts
+    no second, order-destroying sort. The whole path, from the line scan
+    to the staged rows, runs in the JVM: no RDD scan and no Python
+    evaluation, in either partitioner and in faithful mode. The hash
+    partitioner exchanges on word (whose hash partition is the pid), the
+    first-char one on pid."""
+    from tools.plan_fingerprint import PYTHON, fingerprint
 
     from nthu_cs542200_parallel_programming_hw4_mapreduce_spark.operators.mapreduce import (
         JobConfig,
+        stage_output,
         wordcount_df,
     )
 
     p = tmp_path / "in.txt"
     p.write_text("a b c \nd e f \n")
-    cfg = JobConfig(
-        "wc", 3, 0, str(p), 1, None, str(tmp_path / "out"),
-        partition_fn="first_char",
-    )
-    staged = (
-        wordcount_df(spark, cfg)
-        .repartition(cfg.num_reducer, "pid")
-        .sortWithinPartitions(F.col("pid").asc(), F.col("word").asc(), F.col("cnt").asc())
-        .select("pid", F.concat_ws(" ", "word", "cnt").alias("value"))
-    )
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        staged.explain("formatted")
-    plan = buf.getvalue()
-    # no Python evaluation anywhere past the O1 text-chunking source
-    # (which legitimately builds chunk ids via an RDD zipWithIndex)
-    for marker in ("BatchEvalPython", "ArrowEvalPython"):
-        assert marker not in plan
-    # the reducer sort is a JVM in-partition Sort keyed (pid, word, cnt)
-    sort_args = plan.split("Sort\n")[1].splitlines()[1]
-    assert "pid" in sort_args and "word" in sort_args and "cnt" in sort_args
-    # exactly one pid exchange on top of the aggregation's own shuffle
-    assert plan.count("REPARTITION_BY_NUM") == 1
+    for partition_fn, quirks in (("hash", False), ("first_char", False), ("first_char", True)):
+        cfg = JobConfig(
+            "wc", 3, 0, str(p), 1, None, str(tmp_path / "out"),
+            partition_fn=partition_fn,
+            drop_trailing_token=quirks,
+            fuse_chunk_lines=quirks,
+        )
+        staged = stage_output(wordcount_df(spark, cfg), cfg)
+        kinds = {kv.split("=")[0] for kv in fingerprint(staged).split()}
+        assert "Scan.ExistingRDD" not in kinds, kinds
+        assert not kinds & PYTHON, kinds
+        buf = io.StringIO()
+        with redirect_stdout(buf):
+            staged.explain("formatted")
+        plan = buf.getvalue()
+        # the reducer sort is a JVM in-partition Sort keyed (pid, word, cnt)
+        sorts = [sec.splitlines()[1] for sec in plan.split("Sort\n")[1:]]
+        assert any(all(k in a for k in ("pid", "word", "cnt")) for a in sorts), sorts
+        # exactly one R-way exchange on top of the aggregation's own shuffle
+        assert plan.count("REPARTITION_BY_NUM") == 1
+        exchange = next(l for l in plan.splitlines() if "REPARTITION_BY_NUM" in l)
+        key = "pid" if partition_fn == "first_char" else "word"
+        assert f"hashpartitioning({key}#" in exchange, exchange
 
 
 def test_bloom_bits_ride_broadcast_not_plan(spark, sf_dir):

@@ -248,3 +248,29 @@ def test_avro_is_jar_gated(spark):
 
     with _pytest.raises(NotImplementedError, match="avro"):
         read_avro(spark, "/nonexistent/_probe_")
+
+
+def test_line_numbering_across_many_splits(spark, tmp_path):
+    """``numbered_lines`` numbers lines in file order when the file is
+    read in many scan splits, and ``chunked_lines`` assembles faithful
+    (fused) chunks from them exactly as a Python model does."""
+    from nthu_cs542200_parallel_programming_hw4_mapreduce_spark.sources.text import (
+        chunked_lines,
+        numbered_lines,
+    )
+
+    lines = [f"w{i % 13} " * (i % 5) + ("x" * (i % 3)) for i in range(10007)]
+    p = tmp_path / "lines.txt"
+    p.write_text("\n".join(lines) + "\n")
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "4096")
+    try:
+        assert spark.read.text(str(p)).rdd.getNumPartitions() >= 8
+        got = sorted((r["idx"], r["value"]) for r in numbered_lines(spark, str(p)).collect())
+        assert got == list(enumerate(lines))
+        chunks = sorted(map(tuple, chunked_lines(spark, str(p), 7, fuse_chunk_lines=True).collect()))
+    finally:
+        spark.conf.set(key, old)
+    want = [(i // 7 + 1, "".join(lines[i : i + 7])) for i in range(0, len(lines), 7)]
+    assert chunks == want
