@@ -83,16 +83,20 @@ def spread(df: DataFrame) -> DataFrame:
     ≥ target partitions, so this is a structural NO-OP there — the
     guard compares the actual scan partition count, not a constant.
     Non-file sources (or remote storage, where the source provides
-    splits) pass through untouched."""
+    splits) pass through untouched. A frame with no visible input files
+    (an in-memory frame, a foreachBatch micro-batch) is returned without
+    a memo entry, which would otherwise pin it for the process lifetime."""
     spark = df.sparkSession
     key = (_app_id(spark), id(df))
     hit = _SPREAD_MEMO.get(key)
     if hit is not None and hit[0] is df:
         return hit[1]
-    out = df
     files = df.inputFiles()
+    if not files:
+        return df
+    out = df
     local = [f.removeprefix("file:") for f in files if f.startswith("file:")]
-    if files and len(local) == len(files):
+    if len(local) == len(files):
         nbytes = sum(os.path.getsize(f) for f in local if os.path.exists(f))
         cores = spark.sparkContext.defaultParallelism
         target = max(2, min(cores, (nbytes + 65_535) // 65_536))

@@ -496,8 +496,8 @@ from ..registry import oracle_for  # noqa: E402
 )
 def streaming_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Continuous-ingestion fuzzy dedup: documents arrive in micro-
-    batches; each batch is MinHash-banded and joined against the
-    accumulated band index, then appended to it (foreachBatch with a
+    batches; each batch is MinHash-banded once into an epoch-keyed band
+    index and joined against the whole index (foreachBatch with a
     parquet-backed index — the Delta-upsert seat in production). The
     test suite asserts the discovered pair set equals the one-shot batch
     LSH exactly.

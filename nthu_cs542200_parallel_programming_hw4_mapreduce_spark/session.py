@@ -64,6 +64,25 @@ def get_spark(
             "spark.sql.warehouse.dir",
             os.path.join(tempfile.gettempdir(), f"spark-warehouse-{os.getpid()}"),
         )
+        # Streaming checkpoints (offsets, commits, state-store deltas)
+        # commit through a FileSystem rename instead of the default
+        # FileContext one. On the local filesystem FileContext's rename
+        # calls AbstractFileSystem.renameInternal →
+        # RawLocalFileSystem.getFileLinkStatus → FileUtil.readLink, which
+        # forks a `readlink` process per committed file: 87 of 122
+        # executor stack samples of the stream-stream left join (sf0.1,
+        # 4-core host) sat in ChecksumCheckpointFileManager.awaitResult
+        # waiting on those forks, and its state commit took 569 ms on a
+        # data batch (745 ms on a no-data batch) against 50 ms (57 ms)
+        # with this manager. FileSystem.rename is the same atomic
+        # rename(2) locally. Spark's checkpoint checksums and Hadoop's
+        # .crc files stay on: the checksum manager wraps whichever
+        # manager is named here.
+        .config(
+            "spark.sql.streaming.checkpointFileManagerClass",
+            "org.apache.spark.sql.execution.streaming.checkpointing."
+            "FileSystemBasedCheckpointFileManager",
+        )
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

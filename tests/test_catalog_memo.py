@@ -13,6 +13,7 @@ import shutil
 
 from nthu_cs542200_parallel_programming_hw4_mapreduce_spark.catalog import (
     _READ_MEMO,
+    _SPREAD_MEMO,
     spread,
     table,
 )
@@ -64,6 +65,17 @@ def test_spread_noops_on_wide_frames(spark, sf_dir):
     pre-partitioned)."""
     wide = spread(table(spark, sf_dir, "documents"))
     assert spread(wide) is wide
+
+
+def test_spread_leaves_no_memo_for_frames_without_files(spark):
+    """An in-memory frame (like every foreachBatch micro-batch) has no
+    input files: spread returns it unchanged and keeps no memo entry,
+    so fresh frames cannot pile up in the process-lifetime memo."""
+    before = len(_SPREAD_MEMO)
+    for i in range(5):
+        df = spark.createDataFrame([(i, "a b c d")], "doc_id long, text string")
+        assert spread(df) is df
+    assert len(_SPREAD_MEMO) == before
 
 
 def test_memo_is_lazy_only(spark, sf_dir):

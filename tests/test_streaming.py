@@ -185,6 +185,33 @@ def test_incremental_dedup_bucket_cap(spark, monkeypatch):
     assert uncapped == 16
 
 
+def test_incremental_dedup_keeps_only_matches(spark, tmp_path, monkeypatch):
+    """A 3-micro-batch run removes its staged slices and band index,
+    keeping only the ``matches`` dir its returned frame reads, and pins
+    no micro-batch in catalog.spread's memo."""
+    import tempfile
+
+    from nthu_cs542200_parallel_programming_hw4_mapreduce_spark.catalog import (
+        _SPREAD_MEMO,
+    )
+    from nthu_cs542200_parallel_programming_hw4_mapreduce_spark.streaming.incremental import (
+        incremental_minhash_dedup,
+    )
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    text = "alpha beta gamma delta unique pair"
+    docs = spark.createDataFrame(
+        [(i, text if i < 2 else f"doc {i} words here") for i in range(6)],
+        "doc_id long, text string",
+    )
+    memo_before = len(_SPREAD_MEMO)
+    pairs = incremental_minhash_dedup(spark, docs)
+    assert [tuple(r) for r in pairs.collect()] == [(0, 1)]
+    assert len(_SPREAD_MEMO) == memo_before
+    (work,) = [p for p in tmp_path.iterdir() if p.name.startswith("incr_dedup_")]
+    assert [p.name for p in work.iterdir()] == ["matches"]
+
+
 def test_streaming_hopping_equals_batch(spark, sf_dir):
     """The real-streaming hopping topology (window + slide through the
     memory sink) must equal the batch event_hopping_window query — the
@@ -576,6 +603,16 @@ def test_streaming_checkpoint_recovery_across_restart(spark, tmp_path_factory):
         ("view", t(0, 0)): (1, 2.0),
         ("click", t(1, 0)): (1, 4.0),
     }
+    # the faster commit path keeps verification on: every state delta
+    # still has its Spark checksum file, and the session names the
+    # FileSystem-based checkpoint manager
+    deltas = list((root / "checkpoint" / "state").rglob("*.delta"))
+    assert deltas
+    for d in deltas:
+        assert d.with_name(d.name + ".crc").is_file(), d
+    assert spark.conf.get("spark.sql.streaming.checkpointFileManagerClass").endswith(
+        ".FileSystemBasedCheckpointFileManager"
+    )
 
 
 def test_markov_transitions_planted_chain(spark, tmp_path_factory):
